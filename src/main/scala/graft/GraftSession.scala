@@ -9,6 +9,21 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** SQL settings every session shares, local or cluster. */
+  private val commonConfs: Map[String, String] = Map(
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // let the planner choose shuffled-hash join when its size conditions
+    // are met (guide §3.1/§9): skips the per-partition sorts of
+    // sort-merge; parallelism-independent (a per-partition strategy, with
+    // the planner's build-side size guard + AQE). A/B at sf0.1 (min-of-4,
+    // same window): q11 1.38→1.34, q22 2.31→2.25, q60 1.67→1.56.
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
   /** Multi-executor local cluster: `numExecutors` SEPARATE executor JVMs
     * (own heap, own GC) × `coresPerExecutor` — the faithful emulation of an
     * N-executor Spark deployment on one box (local[k] shares one JVM and
@@ -25,14 +40,7 @@ object GraftSession {
       .config("spark.executor.memory", s"${memMb}m")
       .config("spark.executor.extraClassPath", appCp)
       .config("spark.sql.shuffle.partitions", (numExecutors * coresPerExecutor).toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // same join-strategy stance as local() — see the comment there
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(commonConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.ensureRegistered(spark)
@@ -54,26 +62,14 @@ object GraftSession {
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // let the planner choose shuffled-hash join when its size conditions
-      // are met (guide §3.1/§9): skips the per-partition sorts of
-      // sort-merge; parallelism-independent (a per-partition strategy, with
-      // the planner's build-side size guard + AQE). A/B at sf0.1 (min-of-4,
-      // same window): q11 1.38→1.34, q22 2.31→2.25, q60 1.67→1.56.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(commonConfs)
       .config(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
       )
-      // pairs with the sink's SPARK_GRAFT_SINK_NOSORT A/B: concurrent
-      // dynamic-partition writers make the pre-write sort skippable
-      .config("spark.sql.maxConcurrentOutputFileWriters",
-        if (sys.env.get("SPARK_GRAFT_SINK_NOSORT").contains("1")) "128" else "0")
+      // one open dynamic-partition writer per task: the sink sorts within
+      // each task before writing
+      .config("spark.sql.maxConcurrentOutputFileWriters", "0")
     val spark = parquetCodec
       .fold(builder0)(c => builder0.config("spark.sql.parquet.compression.codec", c))
       .getOrCreate()

@@ -32,6 +32,17 @@ object Similarity {
   /** L2 norm of a float/double vector — same native fold. */
   def norm(v: Column): Column = call_function("norm_f64", v)
 
+  /** Rows whose `vecCol` is non-null with a non-zero norm, the norm kept
+    * in `normCol`: one norm-kernel evaluation per row — a filter on
+    * `norm(v)` and a later score over it would each run the kernel (codegen
+    * does not CSE across the filter/project boundary). Zero norms are
+    * excluded because 0/0 = NaN (see `cosineToQuery`).
+    */
+  private def withNorm(df: DataFrame, vecCol: String, normCol: String): DataFrame =
+    df.where(col(vecCol).isNotNull)
+      .withColumn(normCol, norm(col(vecCol)))
+      .where(col(normCol) > 0)
+
   private def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
   /** Cosine of every vector against one literal query vector. Zero-norm
@@ -45,12 +56,7 @@ object Similarity {
     val q = array(query.map(x => lit(x.toDouble)): _*)
     val qn = math.sqrt(query.map(x => x.toDouble * x.toDouble).sum)
     require(qn > 0.0, "query vector has zero norm — cosine is undefined")
-    // one norm-kernel evaluation per row (r7b): the filter and the score
-    // previously each ran it (separate operators — codegen does not CSE
-    // across the filter/project boundary); identical value either way
-    embs.where(col(vecCol).isNotNull)
-      .withColumn("_n", norm(col(vecCol)))
-      .where(col("_n") > 0)
+    withNorm(embs, vecCol, "_n")
       .select(
         col(idCol),
         (dot(col(vecCol), q) / (col("_n") * lit(qn))).as("cosine"))
@@ -96,15 +102,9 @@ object Similarity {
       pairFilter: Column = lit(true)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(qidCol)).orderBy(col("cosine").desc, col(idCol))
-    // norms computed once per corpus row / per probe (r7b) — the scoring
-    // previously re-ran both norm kernels per (corpus, probe) PAIR, i.e.
-    // |Q| times per corpus row; identical values by construction (same
-    // kernel, same vector, same product expression)
-    corpus.where(col(vecCol).isNotNull && norm(col(vecCol)) > 0)
-      .withColumn("_cn", norm(col(vecCol)))
-      .crossJoin(broadcast(
-        queries.where(col(qvecCol).isNotNull && norm(col(qvecCol)) > 0)
-          .withColumn("_qn", norm(col(qvecCol)))))
+    // norms once per corpus row / per probe, not per (corpus, probe) pair
+    withNorm(corpus, vecCol, "_cn")
+      .crossJoin(broadcast(withNorm(queries, qvecCol, "_qn")))
       .where(col(idCol) =!= col(qidCol) && pairFilter)
       .withColumn("cosine",
         dot(col(vecCol), col(qvecCol)) / (col("_cn") * col("_qn")))
@@ -198,9 +198,7 @@ object Similarity {
 
     // per-probe probe plan, fully columnar: dist array → nProbe nearest cids
     val cidSeq = sequence(lit(0), lit(model.nlist - 1))
-    val qd = queries
-      .where(col(qvecCol).isNotNull && norm(col(qvecCol)) > 0)
-      .withColumn("_qnrm", norm(col(qvecCol)))
+    val qd = withNorm(queries, qvecCol, "_qnrm")
       .withColumn("_cd", graft.functions.VectorFunctions.centroidDists(
         col(qvecCol), model.centroids, isFloatQ))
       .withColumn("_probed", transform(
@@ -275,7 +273,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(threshold > -1.0 && threshold < 1.0,
       s"cosineSelfJoin: threshold must be in (-1, 1), got $threshold")
-    val clean = embs.where(col(vecCol).isNotNull && norm(col(vecCol)) > 0)
+    val clean = withNorm(embs, vecCol, "_nrm")
     val cents = kmeansCentroids(clean, nlist, idCol = idCol, vecCol = vecCol)
     val isF = isFloatVec(embs, vecCol)
     val twoR = 2.0 * math.sqrt(math.max(0.0, 2.0 - 2.0 * threshold))
@@ -286,11 +284,10 @@ object Similarity {
     // (BenchExtra: join-no-verify 0.49 s vs pairs 1.59 s at sf0.1).
     // Identical values by construction: same kernel, same input vector,
     // and the product _na·_nb is the exact expression norm(a)·norm(b) was.
-    val assigned = clean.select(col(idCol), col(vecCol))
+    val assigned = clean.select(col(idCol), col(vecCol), col("_nrm"))
       .withColumn("_cd", graft.functions.VectorFunctions.centroidDists(
         col(vecCol), cents, isF))
       .withColumn("_hd", array_min(col("_cd")))
-      .withColumn("_nrm", norm(col(vecCol)))
     val home = assigned
       .withColumn("cid", (array_position(col("_cd"), col("_hd")) - 1).cast("int"))
       .select(col(idCol).as("_ida"), col(vecCol).as("_va"),
@@ -429,7 +426,7 @@ object Similarity {
     // null / zero-norm rows can't live on the unit sphere (normalize would
     // mint NaN centroids, a null cid would NPE the radius pass) — exclude
     // them from the index, matching the search paths' guard
-    val clean = embs.where(col(vecCol).isNotNull && norm(col(vecCol)) > 0)
+    val clean = withNorm(embs, vecCol, "_n").drop("_n")
     val cents = kmeansCentroids(clean, nlist, sampleSize, seed = seed,
       idCol = idCol, vecCol = vecCol)
     val assigned = clean
@@ -502,7 +499,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): IvfModel = {
     val spark = newEmbs.sparkSession
     val (_, model) = readIvfIndex(spark, dir) // validates the sidecar
-    val clean = newEmbs.where(col(vecCol).isNotNull && norm(col(vecCol)) > 0)
+    val clean = withNorm(newEmbs, vecCol, "_n").drop("_n")
     val assigned = clean
       .withColumn("_asn", graft.functions.VectorFunctions.nearestCentroid(
         col(vecCol), model.centroids, isFloatVec(newEmbs, vecCol)))

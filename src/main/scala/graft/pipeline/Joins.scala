@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stream-stream stateful joins over the turn stream (north-rule: assistant
   * tool-calls ⋈ tool responses; the reference has no joins at all —
@@ -134,100 +133,38 @@ object Joins {
       payload: String, matched_ts: Option[Timestamp], matched_tie: Option[Long],
       matched_payload: Option[String])
 
-  final case class AsOfRec(tsMs: Long, tie: Long, payload: String)
-
-  /** Per-key state: the latest right row at-or-below the emitted frontier
-    * (O(1) forever) plus the not-yet-ripe arrivals above it (bounded by the
-    * watermark delay × per-key event rate).
+  /** A buffered event. `rank` places rights before an equal-ts left (0),
+    * or after it under `strict` (2); lefts rank 1 — the batch operator's
+    * `_side` order.
     */
-  final case class AsOfState(lastRight: Option[AsOfRec],
-      pendingLeft: Vector[AsOfRec], pendingRight: Vector[AsOfRec],
-      frontierMs: Long)
+  final case class AsOfRec(tsUs: Long, rank: Int, tie: Long, isLeft: Boolean,
+      payload: String)
 
-  private val emptyAsOf = AsOfState(None, Vector.empty, Vector.empty, Long.MinValue)
-
-  private def asOfProcess(k: String, it: Iterator[AsOfEvent],
-      state: GroupState[AsOfState], streaming: Boolean, strict: Boolean,
-      idleTtlMs: Option[Long])
-      : Iterator[AsOfJoined] = {
-    var s = state.getOption.getOrElse(emptyAsOf)
-    // idle-key expiry: the timeout fired with nothing buffered — remove the
-    // state entirely, so idle keys cost ZERO. Full removal cannot re-emit
-    // on an at-least-once redelivery, because the ENGINE already drops it:
-    // FlatMapGroupsWithStateExec filters input rows older than the
-    // PREVIOUS batch's watermark (verified against this operator — the
-    // redelivery probe in the TTL test never reaches asOfProcess), and an
-    // already-emitted event has ts ≤ the watermark that sealed its
-    // emission ≤ every later watermark. The equality edge (wm parked
-    // exactly at ts) cannot coexist with expiry: removal required wm to
-    // advance ≥ ttl past the emission watermark first.
-    if (state.hasTimedOut && idleTtlMs.isDefined &&
-        s.pendingLeft.isEmpty && s.pendingRight.isEmpty) {
-      state.remove()
-      return Iterator.empty
-    }
-    // data-path expiry: a key whose NEXT arrival lands in the same batch
-    // the TTL elapses never gets its timeout invoked (timeouts only fire
-    // for keys without data — the same starvation the CEP drain fixes), so
-    // the idle window is also checked on arrival: frontierMs is the
-    // watermark at the key's last drain, i.e. its last activity
-    if (streaming) idleTtlMs.foreach { ttl =>
-      if (s.pendingLeft.isEmpty && s.pendingRight.isEmpty &&
-          s.frontierMs > Long.MinValue &&
-          state.getCurrentWatermarkMs() - s.frontierMs >= ttl)
-        s = s.copy(lastRight = None)
-    }
-    // ingest: anything at or below the already-emitted frontier is late
-    // beyond the watermark contract → dropped (same rule as append windows)
-    it.foreach { e =>
-      if (!streaming || e.ts.getTime > s.frontierMs) {
-        val rec = AsOfRec(e.ts.getTime, e.tie, e.payload)
-        s = if (e.isLeft) s.copy(pendingLeft = s.pendingLeft :+ rec)
-            else s.copy(pendingRight = s.pendingRight :+ rec)
+  /** One fold over (ts, rank, tie): a right row becomes the carry (the
+    * latest right so far), a left row emits with the carry as its match.
+    */
+  private final class AsOfFold(strict: Boolean)
+      extends WatermarkSeal.Fold[String, AsOfEvent, AsOfRec, Option[AsOfRec], AsOfJoined] {
+    def init: Option[AsOfRec] = None
+    def event(e: AsOfEvent): AsOfRec =
+      AsOfRec(WatermarkSeal.micros(e.ts), if (e.isLeft) 1 else if (strict) 2 else 0,
+        e.tie, e.isLeft, e.payload)
+    def tsUs(r: AsOfRec): Long = r.tsUs
+    def id(r: AsOfRec): Any = (r.isLeft, r.tie)
+    val order: Ordering[AsOfRec] = Ordering.by((r: AsOfRec) => (r.tsUs, r.rank, r.tie))
+    def step(k: String, last: Option[AsOfRec], r: AsOfRec,
+        out: scala.collection.mutable.Buffer[AsOfJoined]): Option[AsOfRec] =
+      if (!r.isLeft) Some(r)
+      else {
+        out += AsOfJoined(k, WatermarkSeal.timestamp(r.tsUs), r.tie, r.payload,
+          last.map(m => WatermarkSeal.timestamp(m.tsUs)), last.map(_.tie),
+          last.map(_.payload))
+        last
       }
-    }
-    // drain everything the watermark has sealed: no earlier-ts arrival is
-    // possible below it, so matches are final (batch mode seals all input)
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val out = scala.collection.mutable.Buffer[AsOfJoined]()
-    val (ripeL, waitL) = s.pendingLeft.partition(_.tsMs <= wm)
-    val (ripeR, waitR) = s.pendingRight.partition(_.tsMs <= wm)
-    // distinct: an at-least-once upstream may redeliver an event inside the
-    // watermark window — identical (ts, tie, payload) records collapse so
-    // replay cannot double-emit a match (redelivery BELOW the frontier is
-    // already dropped at ingest)
-    val ls = ripeL.distinct.sortBy(r => (r.tsMs, r.tie))
-    val rs = ripeR.distinct.sortBy(r => (r.tsMs, r.tie))
-    var last = s.lastRight
-    var j = 0
-    ls.foreach { l =>
-      while (j < rs.length &&
-          (if (strict) rs(j).tsMs < l.tsMs else rs(j).tsMs <= l.tsMs)) {
-        last = Some(rs(j)); j += 1
-      }
-      out += AsOfJoined(k, new Timestamp(l.tsMs), l.tie, l.payload,
-        last.map(r => new Timestamp(r.tsMs)), last.map(_.tie), last.map(_.payload))
-    }
-    while (j < rs.length) { last = Some(rs(j)); j += 1 }
-    s = s.copy(lastRight = last, pendingLeft = waitL, pendingRight = waitR,
-      frontierMs = math.max(s.frontierMs, wm))
-    state.update(s)
-    if (streaming) {
-      if (waitL.nonEmpty || waitR.nonEmpty) {
-        val minPending = (waitL ++ waitR).iterator.map(_.tsMs).min
-        state.setTimeoutTimestamp(math.max(minPending, wm + 1))
-      } else idleTtlMs.foreach { ttl =>
-        // nothing buffered: arm the idle clock — fires only if the key sees
-        // no arrivals until the watermark passes (wm + ttl), at which point
-        // the retained right row is removed (top of this method)
-        state.setTimeoutTimestamp(math.max(wm, 0L) + ttl)
-      }
-    }
-    out.iterator
   }
 
   /** Streaming as-of join — the event-time-correct twin of `asOfJoin`,
-    * Flink's "temporal join" recast on `flatMapGroupsWithState`. Each left
+    * Flink's "temporal join" recast on the `WatermarkSeal` kernel. Each left
     * event is matched against the latest right event at-or-before its
     * timestamp (`strict=true` → strictly before) and EMITTED ONLY once the
     * watermark passes its timestamp, so out-of-order arrival within the
@@ -235,12 +172,12 @@ object Joins {
     * streaming output == batch `asOfJoin` on the same sealed input
     * (EventTimeSpec pins this).
     *
-    * Scale: per-key state is ONE retained right row plus the unripe buffer
+    * Scale: per-key state is ONE retained right row plus the unsealed buffer
     * (watermark-delay-bounded); parallelism is #keys, the same sharding as
     * every other keyed stage. `events` must carry a watermark on `ts` in
     * streaming mode; batch mode (`streaming=false`) seals everything.
     *
-    * Retention contract: without `idleTtlMs`, a key's `lastRight` is held
+    * Retention contract: without `idleTtlMs`, a key's latest right row is held
     * FOREVER once its buffers drain — state grows with total distinct keys
     * over the stream's lifetime (fine for bounded key universes like
     * conversation ids within a retention window; wrong for unbounded ones).
@@ -259,21 +196,9 @@ object Joins {
     */
   def asOfJoinStream(events: Dataset[AsOfEvent], streaming: Boolean = true,
       strict: Boolean = false, idleTtlMs: Option[Long] = None): Dataset[AsOfJoined] = {
-    // ttl <= 0 would arm setTimeoutTimestamp(wm + ttl) at-or-below the
-    // current watermark — a runtime query failure — and make the data-path
-    // check expire keys instantly; reject it at plan time, loudly
-    require(idleTtlMs.forall(_ > 0),
-      s"idleTtlMs must be positive event-time millis, got $idleTtlMs")
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.k)
-      .flatMapGroupsWithState[AsOfState, AsOfJoined](OutputMode.Append, timeoutConf) {
-        (k, it, state) =>
-          if (state.hasTimedOut) asOfProcess(k, Iterator.empty, state, streaming, strict, idleTtlMs)
-          else asOfProcess(k, it, state, streaming, strict, idleTtlMs)
-      }
+    WatermarkSeal.run(events.groupByKey(_.k), new AsOfFold(strict), streaming, idleTtlMs)
   }
 
   /** Stream-static dedup: drop streaming records whose content already

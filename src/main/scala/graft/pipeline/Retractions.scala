@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Continuously-maintained per-group aggregates over a keyed
   * upsert/delete changelog — the dynamic-table / RETRACT-STREAM semantic
@@ -21,11 +20,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the window runs co-partitioned — then a hash aggregate with map-side
   * combine on the (small) group domain. No driver work.
   *
-  * Streaming: `flatMapGroupsWithState` keyed by the entity key, holding
-  * the key's CURRENT (group, value) plus the unripe (above-watermark)
-  * arrivals. Each change, once sealed by the watermark and ordered by
-  * (ts, tie), emits up to two deltas: a retraction `(old_group, -1, -old_v)`
-  * for the row it replaces and an insertion `(new_group, +1, +v)` unless
+  * Streaming: the `WatermarkSeal` kernel keyed by the entity key, holding
+  * the key's CURRENT (group, value) plus the unsealed arrivals. Each
+  * change, once sealed by the watermark and ordered by (ts, tie), emits up
+  * to two deltas: a retraction `(old_group, -1, -old_v)` for the row it
+  * replaces and an insertion `(new_group, +1, +v)` unless
   * it is a delete. Folding the deltas per group (sum of d_keys / d_sum)
   * reproduces the batch aggregate at every watermark frontier — the
   * telescoping is exact because intermediate versions cancel, so the fold
@@ -34,7 +33,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * same-microsecond ties, redelivery, group moves, and deletes).
   *
   * Design for scale:
-  *   - State per key is O(1) (the current row) + the unripe buffer, which
+  *   - State per key is O(1) (the current row) + the unsealed buffer, which
   *     is bounded by watermark delay × per-key change rate and drains
   *     every trigger — the same bound as the as-of join / SCD2 buffers.
   *   - Deltas are append-only and replayable into the exactly-once sink;
@@ -82,12 +81,7 @@ object Retractions {
     * order every other keyed stage uses.
     */
   final case class ChangeEvent(k: Long, ts: Timestamp, tie: Long, op: String,
-      grp: String, v: Long) {
-    def tsMs: Long = ts.getTime
-    // getTime already includes the integral-millisecond part of nanos;
-    // only the sub-millisecond remainder is added back for exact micros
-    def tsUs: Long = ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000
-  }
+      grp: String, v: Long)
 
   /** One retraction delta. Fold per `grp` (sum d_keys, sum d_sum); groups
     * folding to d_keys == 0 hold no current keys and are absent from the
@@ -95,59 +89,34 @@ object Retractions {
     */
   final case class AggDelta(grp: String, d_keys: Long, d_sum: Long)
 
-  /** Compact change kept in the unripe buffer: primitives only — the
+  /** Compact change kept in the pending buffer: primitives only — the
     * payload the deltas need, nothing else enters state.
     */
-  final case class Chg(tsUs: Long, tsMs: Long, tie: Long, del: Boolean,
-      grp: String, v: Long)
+  final case class Chg(tsUs: Long, tie: Long, del: Boolean, grp: String, v: Long)
 
-  /** Per-key state: the current row (None = key absent/deleted) + the
-    * not-yet-sealed arrivals. `hasCur` disambiguates "no current row"
-    * from "never seen" so a delete of a live key retracts exactly once.
+  /** A key's current row. */
+  final case class Cur(grp: String, v: Long)
+
+  /** The buffering half both per-key changelog folds share. */
+  private abstract class ChgFold[C, O] extends WatermarkSeal.Fold[Long, ChangeEvent, Chg, C, O] {
+    def event(e: ChangeEvent): Chg =
+      Chg(WatermarkSeal.micros(e.ts), e.tie, e.op == "D", e.grp, e.v)
+    def tsUs(c: Chg): Long = c.tsUs
+    def id(c: Chg): Any = c.tie
+    val order: Ordering[Chg] = Ordering.by((c: Chg) => (c.tsUs, c.tie))
+  }
+
+  /** Carry: the key's current row (None = absent or deleted, so a deleted
+    * key's state row is removed once its buffer drains).
     */
-  final case class RetractState(hasCur: Boolean, curGrp: String, curV: Long,
-      pending: Seq[Chg])
-
-  private def emptyState = RetractState(hasCur = false, "", 0L, Vector.empty)
-
-  private def process(it: Iterator[ChangeEvent], state: GroupState[RetractState],
-      streaming: Boolean): Iterator[AggDelta] = {
-    var s = state.getOption.getOrElse(emptyState)
-    if (!(streaming && state.hasTimedOut)) {
-      // at-least-once delivery: a redelivered change still inside the
-      // watermark window arrives before the original drains — dedup the
-      // buffer by tie so it can't apply twice. (A redelivery of an
-      // already-drained change is older than the watermark by definition
-      // and Spark's watermark filter drops it before this operator.)
-      val have = s.pending.iterator.map(_.tie).toSet
-      val fresh = it.map(e => Chg(e.tsUs, e.tsMs, e.tie, e.op == "D", e.grp, e.v))
-        .filterNot(c => have(c.tie)).toSeq.distinctBy(_.tie)
-      s = s.copy(pending = s.pending ++ fresh)
+  private object RetractFold extends ChgFold[Option[Cur], AggDelta] {
+    def init: Option[Cur] = None
+    def step(k: Long, cur: Option[Cur], c: Chg,
+        out: scala.collection.mutable.Buffer[AggDelta]): Option[Cur] = {
+      cur.foreach(o => out += AggDelta(o.grp, -1L, -o.v))
+      if (c.del) None
+      else { out += AggDelta(c.grp, 1L, c.v); Some(Cur(c.grp, c.v)) }
     }
-    // batch input is complete: everything is ripe by definition. Streaming
-    // seals strictly below the watermark — a same-timestamp sibling with a
-    // smaller tie could still arrive at the boundary.
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val (ripe, wait) = s.pending.partition(_.tsMs < wm)
-    val out = scala.collection.mutable.Buffer[AggDelta]()
-    if (ripe.nonEmpty) {
-      var hasCur = s.hasCur
-      var curGrp = s.curGrp
-      var curV = s.curV
-      ripe.sortBy(c => (c.tsUs, c.tie)).foreach { c =>
-        if (hasCur) out += AggDelta(curGrp, -1L, -curV)
-        if (c.del) { hasCur = false; curGrp = ""; curV = 0L }
-        else { hasCur = true; curGrp = c.grp; curV = c.v; out += AggDelta(c.grp, 1L, c.v) }
-      }
-      s = RetractState(hasCur, curGrp, curV, wait)
-    }
-    state.update(s)
-    // a key whose pending changes ripen in a batch that brings it no new
-    // data would starve without a timeout (same fix as the CEP drain)
-    if (streaming && s.pending.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(s.pending.iterator.map(_.tsMs).min, wm + 1))
-    out.iterator
   }
 
   /** Streaming retraction aggregation — emits per-change deltas the
@@ -159,12 +128,7 @@ object Retractions {
       streaming: Boolean = true): Dataset[AggDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.k)
-      .flatMapGroupsWithState[RetractState, AggDelta](OutputMode.Append, timeoutConf) {
-        (_, it, state) => process(it, state, streaming)
-      }
+    WatermarkSeal.run(events.groupByKey(_.k), RetractFold, streaming)
   }
 
   /** One sealed per-key ROW delta: the key's current row became
@@ -176,49 +140,27 @@ object Retractions {
   final case class RowDelta(k: Long, ts_us: Long, tie: Long, del: Boolean,
       grp: String, v: Long)
 
-  final case class RowState(pending: Seq[Chg])
-
-  private def processRows(k: Long, it: Iterator[ChangeEvent],
-      state: GroupState[RowState], streaming: Boolean): Iterator[RowDelta] = {
-    var s = state.getOption.getOrElse(RowState(Vector.empty))
-    if (!(streaming && state.hasTimedOut)) {
-      // same redelivery contract as `process` (dedup by tie in-window;
-      // older-than-watermark redeliveries never reach this operator)
-      val have = s.pending.iterator.map(_.tie).toSet
-      val fresh = it.map(e => Chg(e.tsUs, e.tsMs, e.tie, e.op == "D", e.grp, e.v))
-        .filterNot(c => have(c.tie)).toSeq.distinctBy(_.tie)
-      s = RowState(s.pending ++ fresh)
+  /** No carry: the store downstream is the current row, so a drained key
+    * always loses its state row.
+    */
+  private object RowFold extends ChgFold[Boolean, RowDelta] {
+    def init: Boolean = false
+    def step(k: Long, none: Boolean, c: Chg,
+        out: scala.collection.mutable.Buffer[RowDelta]): Boolean = {
+      out += RowDelta(k, c.tsUs, c.tie, c.del, c.grp, c.v)
+      none
     }
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val (ripe, wait) = s.pending.partition(_.tsMs < wm)
-    val out = ripe.sortBy(c => (c.tsUs, c.tie))
-      .map(c => RowDelta(k, c.tsUs, c.tie, c.del, c.grp, c.v))
-    // a fully-drained key REMOVES its state row (r7, ADVICE): unlike
-    // retractStream nothing semantic is retained here — an empty RowState
-    // kept forever grows state by one row per distinct key ever seen,
-    // contradicting the "state is the unripe buffer ONLY" contract
-    if (wait.isEmpty) state.remove() else state.update(RowState(wait))
-    if (streaming && wait.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(wait.iterator.map(_.tsMs).min, wm + 1))
-    out.iterator
   }
 
   /** The SEALED changelog: every change, once final under the watermark,
     * in its key's total (ts, tie) order — what a per-key row store folds
-    * (`MaterializedTable`). State is the unripe buffer ONLY (no current
-    * row — the store downstream is the current row).
+    * (`MaterializedTable`). State is the unsealed buffer ONLY.
     */
   def rowDeltaStream(events: Dataset[ChangeEvent],
       streaming: Boolean = true): Dataset[RowDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.k)
-      .flatMapGroupsWithState[RowState, RowDelta](OutputMode.Append, timeoutConf) {
-        (k, it, state) => processRows(k, it, state, streaming)
-      }
+    WatermarkSeal.run(events.groupByKey(_.k), RowFold, streaming)
   }
 
   // ------------------- incremental JOIN maintenance -------------------
@@ -228,10 +170,7 @@ object Retractions {
     * rest the usual changelog envelope.
     */
   final case class SideEvent(side: Boolean, j: String, k: Long, ts: Timestamp,
-      tie: Long, op: String, v: Long) {
-    def tsMs: Long = ts.getTime
-    def tsUs: Long = ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000
-  }
+      tie: Long, op: String, v: Long)
 
   /** One join-pair delta: the pair (a_k, b_k) with values (va, vb)
     * entered (`d` = +1) or left (`d` = −1) the join result. Fold per
@@ -242,64 +181,50 @@ object Retractions {
   final case class JoinDelta(j: String, a_k: Long, b_k: Long, d: Long,
       va: Long, vb: Long)
 
-  final case class SideChg(side: Boolean, k: Long, tsUs: Long, tsMs: Long,
-      tie: Long, del: Boolean, v: Long)
+  final case class SideChg(side: Boolean, k: Long, tsUs: Long, tie: Long,
+      del: Boolean, v: Long)
 
-  /** Per-join-key state: both sides' current rows + the unripe buffer.
-    * Current maps are bounded by rows PER JOIN KEY per side (the same
-    * bound any streaming join carries — a hot join key concentrates
-    * state; pre-aggregate or salt upstream if a key's side exceeds
-    * memory). The buffer drains every trigger.
+  /** Carry: both sides' current rows (entity key → value). Bounded by rows
+    * PER JOIN KEY per side (the same bound any streaming join carries — a
+    * hot join key concentrates state; pre-aggregate or salt upstream if a
+    * key's side exceeds memory); a join key whose both sides died loses
+    * its state row.
     */
-  final case class JoinState(aCur: Map[Long, Long], bCur: Map[Long, Long],
-      pending: Seq[SideChg])
+  final case class JoinCur(a: Map[Long, Long], b: Map[Long, Long])
 
-  private def emptyJoinState = JoinState(Map.empty, Map.empty, Vector.empty)
-
-  private def processJoin(j: String, it: Iterator[SideEvent],
-      state: GroupState[JoinState], streaming: Boolean): Iterator[JoinDelta] = {
-    var s = state.getOption.getOrElse(emptyJoinState)
-    if (!(streaming && state.hasTimedOut)) {
-      // redelivery dedup by (side, tie) inside the window, as everywhere
-      val have = s.pending.iterator.map(c => (c.side, c.tie)).toSet
-      val fresh = it
-        .map(e => SideChg(e.side, e.k, e.tsUs, e.tsMs, e.tie, e.op == "D", e.v))
-        .filterNot(c => have((c.side, c.tie))).toSeq
-        .distinctBy(c => (c.side, c.tie))
-      s = s.copy(pending = s.pending ++ fresh)
-    }
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val (ripe, wait) = s.pending.partition(_.tsMs < wm)
-    val out = scala.collection.mutable.Buffer[JoinDelta]()
-    var aCur = s.aCur
-    var bCur = s.bCur
+  private object JoinFold
+      extends WatermarkSeal.Fold[String, SideEvent, SideChg, JoinCur, JoinDelta] {
+    def init: JoinCur = JoinCur(Map.empty, Map.empty)
+    def event(e: SideEvent): SideChg =
+      SideChg(e.side, e.k, WatermarkSeal.micros(e.ts), e.tie, e.op == "D", e.v)
+    def tsUs(c: SideChg): Long = c.tsUs
+    def id(c: SideChg): Any = (c.side, c.tie)
     // one total (ts, tie) order per join key ACROSS sides: an A-change and
     // a B-change interleave exactly as their event times dictate
-    ripe.sortBy(c => (c.tsUs, c.tie)).foreach { c =>
+    val order: Ordering[SideChg] = Ordering.by((c: SideChg) => (c.tsUs, c.tie))
+    def step(j: String, cur: JoinCur, c: SideChg,
+        out: scala.collection.mutable.Buffer[JoinDelta]): JoinCur = {
+      var a = cur.a
+      var b = cur.b
       if (c.side) {
-        aCur.get(c.k).foreach(old =>
-          bCur.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, -1L, old, vb) })
-        if (c.del) aCur -= c.k
+        a.get(c.k).foreach(old =>
+          b.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, -1L, old, vb) })
+        if (c.del) a -= c.k
         else {
-          bCur.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, 1L, c.v, vb) }
-          aCur += (c.k -> c.v)
+          b.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, 1L, c.v, vb) }
+          a += (c.k -> c.v)
         }
       } else {
-        bCur.get(c.k).foreach(old =>
-          aCur.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, -1L, va, old) })
-        if (c.del) bCur -= c.k
+        b.get(c.k).foreach(old =>
+          a.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, -1L, va, old) })
+        if (c.del) b -= c.k
         else {
-          aCur.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, 1L, va, c.v) }
-          bCur += (c.k -> c.v)
+          a.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, 1L, va, c.v) }
+          b += (c.k -> c.v)
         }
       }
+      JoinCur(a, b)
     }
-    s = JoinState(aCur, bCur, wait)
-    state.update(s)
-    if (streaming && wait.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(wait.iterator.map(_.tsMs).min, wm + 1))
-    out.iterator
   }
 
   /** Incremental inner-join maintenance over TWO changelogs — the
@@ -332,12 +257,7 @@ object Retractions {
       .select(lit(isA).as("side"), col("grp").as("j"), col("k"), col("ts"),
         col("tie"), col("op"), col("v"))
     val tagged = tag(a, isA = true).unionByName(tag(b, isA = false)).as[SideEvent]
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    tagged.groupByKey(_.j)
-      .flatMapGroupsWithState[JoinState, JoinDelta](OutputMode.Append, timeoutConf) {
-        (j, it, state) => processJoin(j, it, state, streaming)
-      }
+    WatermarkSeal.run(tagged.groupByKey(_.j), JoinFold, streaming)
   }
 
   /** Rewrite a MOVING-KEY changelog into `joinDeltaStream`'s

@@ -195,13 +195,10 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
       .repartitionByRange(parts, col("route"), col("src_table"), col("p_date"), col("w_salt"))
       .drop("w_salt")
     // the within-task sort exists so the dynamic-partition writer holds ONE
-    // open file at a time; spark.sql.maxConcurrentOutputFileWriters trades
-    // writer memory for skipping that sort — A/B'd via this env knob
-    // (BENCH/BASELINE.md records the measurement; sort remains the default)
-    val staged =
-      if (sys.env.get("SPARK_GRAFT_SINK_NOSORT").contains("1")) ranged
-      else ranged.sortWithinPartitions("route", "src_table", "p_date")
-    staged.write.mode("overwrite")
+    // open file at a time (skipping it for concurrent writers measured no
+    // better — BENCH/BASELINE.md)
+    ranged.sortWithinPartitions("route", "src_table", "p_date")
+      .write.mode("overwrite")
       // rolling on the committed files (0 = unlimited — Spark's own
       // convention for spark.sql.files.maxRecordsPerFile); ≙ reference
       // rolling policy S3Sink.scala:116-120: the explicit record cap and/or

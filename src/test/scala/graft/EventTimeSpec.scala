@@ -449,7 +449,17 @@ class EventTimeSpec extends SparkSpec {
       ("u1", ts(10), 1L, "a"), ("u1", ts(20), 2L, "b"), ("u1", ts(20), 3L, "b2"),
       ("u1", ts(40), 4L, "c"), ("u2", ts(15), 5L, "x"), ("u2", ts(35), 6L, "y"),
       ("u3", ts(25), 7L, "only")).toDF("k", "ts", "tie", "v")
-    val want = Scd2.materialize(changes, "k", "ts", "tie")
+    // u4: a sub-millisecond sibling. "o" is 300 µs BEFORE "p" in the same
+    // millisecond and arrives two batches after it: b2a's 55 s change parks
+    // the watermark at exactly p's millisecond (5 s delay), b2b's arrival
+    // makes u4 seal at that watermark, and b2c's "o" is above the late
+    // filter's watermark in µs — so it must still enter the history
+    def subMs(sec: Long, us: Int) = { val t = ts(sec); t.setNanos(us * 1000); t }
+    val sibling = Seq(("u4", subMs(50, 700), 11L, "p"), ("u4", ts(55), 12L, "q"),
+      ("u4", ts(56), 13L, "r"), ("u4", subMs(50, 400), 10L, "o"))
+      .toDF("k", "ts", "tie", "v")
+    val all = changes.unionByName(sibling)
+    val want = Scd2.materialize(all, "k", "ts", "tie")
       .where(col("valid_to").isNotNull)
       .select(col("k"), col("ts").as("valid_from"), col("tie").as("from_tie"),
         col("valid_to"))
@@ -468,6 +478,10 @@ class EventTimeSpec extends SparkSpec {
     // watermark delay) plus an exact redelivery of an already-sent change
     writeEnv("b1", f1.toSeq)
     writeEnv("b2", f2.toSeq :+ f1.head)
+    val u4 = Scd2.scd2Events(sibling, "k", "ts", "tie").collect().sortBy(_.tie)
+    writeEnv("b2a", Seq(u4(1), u4(2)))
+    writeEnv("b2b", Seq(u4(3)))
+    writeEnv("b2c", Seq(u4(0)))
     writeEnv("b3", Seq(Scd2.Scd2Event("zz", ts(86400), 900L, "{}")))
     writeEnv("b4", Seq(Scd2.Scd2Event("zz", ts(172800), 901L, "{}")))
     val envSchema = Encoders.product[Scd2.Scd2Event].schema
@@ -480,7 +494,7 @@ class EventTimeSpec extends SparkSpec {
     assertSameRows(got, want, "streaming SCD2 closed set == batch history")
     // batch mode of the same operator seals everything — identical closed set
     val batchGot = Scd2.scd2Stream(
-        Scd2.scd2Events(changes, "k", "ts", "tie"), streaming = false).toDF()
+        Scd2.scd2Events(all, "k", "ts", "tie"), streaming = false).toDF()
       .select(col("k"), col("valid_from"), col("from_tie"), col("valid_to"))
     assertSameRows(batchGot, want, "batch-mode scd2Stream == materialize")
     // the current view is the LWW row per key
@@ -489,42 +503,130 @@ class EventTimeSpec extends SparkSpec {
     assert(cur == Map("u1" -> 4L, "u2" -> 6L, "u3" -> 7L))
   }
 
+  /** Write `df` as the single file `dir/name.parquet` of a file stream. */
+  private def writeFile(dir: String, name: String, df: DataFrame): Unit = {
+    val tmp = s"$dir/.tmp-$name"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))(0).getPath
+    fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/$name.parquet"))
+    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+  }
+
+  /** Stream `files` one per trigger (watermark `delay` on ts) through `op`
+    * to completion: the output, and each trigger's state row count.
+    */
+  private def runStateful(tag: String, files: Seq[DataFrame], delay: String)(
+      op: DataFrame => DataFrame): (DataFrame, Seq[Long]) = {
+    val dir = tmpDir(tag)
+    files.zipWithIndex.foreach { case (df, i) => writeFile(dir, f"b$i%03d", df) }
+    val stream = spark.readStream.schema(files.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+      .withWatermark("ts", delay)
+    val q = op(stream).writeStream.outputMode("append").format("memory")
+      .queryName(s"${tag}_s").start()
+    q.processAllAvailable()
+    val rows = q.recentProgress.toSeq.flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
+    q.stop()
+    (spark.table(s"${tag}_s"), rows)
+  }
+
   test("rowDeltaStream: fully-drained keys remove their state rows") {
     // r7 (ADVICE): a key whose buffer fully drains must state.remove() —
-    // an empty RowState retained forever is one state row per key ever seen
+    // an empty state retained forever is one state row per key ever seen.
+    // The same holds for a deleted key in retractStream and a join key
+    // whose both sides died in joinDeltaStream: nothing semantic is left.
     import spark.implicits._
     import graft.pipeline.Retractions
     def mkTs(sec: Long) = new Timestamp(1700000000000L + sec * 1000)
-    val dir = tmpDir("rowdrain")
-    def writeF(name: String, rs: Seq[(Long, Timestamp, Long, String, String, Long)]): Unit = {
-      val tmp = s"$dir/.tmp-$name"
+    def changes(rs: (Long, Timestamp, Long, String, String, Long)*): DataFrame =
       rs.toDF("k", "ts", "event_id", "op", "grp", "v")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))(0).getPath
-      fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/$name.parquet"))
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-    writeF("b1", Seq((1L, mkTs(10), 1L, "U", "g", 5L), (2L, mkTs(12), 2L, "U", "g", 6L)))
-    // far-future heartbeats ripen keys 1 and 2 completely; the last
+    def ev(s: DataFrame) = Retractions.changeEvents(s, "k", "ts", "event_id", "op", "grp", "v")
+    // far-future heartbeats drain every key before them; the last
     // heartbeat's own event stays pending, so exactly ONE state row remains
-    writeF("b2", Seq((99L, mkTs(100000), 900L, "U", "g", 0L)))
-    writeF("b3", Seq((99L, mkTs(200000), 901L, "U", "g", 0L)))
-    val schema = Seq((1L, mkTs(0), 1L, "U", "g", 1L))
-      .toDF("k", "ts", "event_id", "op", "grp", "v").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-      .withWatermark("ts", "60 seconds")
-    val ev = Retractions.changeEvents(stream, "k", "ts", "event_id", "op", "grp", "v")
-    val q = Retractions.rowDeltaStream(ev).toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("rowdrain_s").start()
-    q.processAllAvailable()
-    val stateRows = q.recentProgress.flatMap(_.stateOperators.headOption)
-      .lastOption.map(_.numRowsTotal)
-    q.stop()
-    assert(stateRows.contains(1L),
-      s"drained keys must leave no state row (want 1 — the unripe heartbeat), got $stateRows")
+    val heartbeats = Seq(changes((99L, mkTs(100000), 900L, "U", "hb", 0L)),
+      changes((99L, mkTs(200000), 901L, "U", "hb", 0L)))
+    def lastStateRows(tag: String, first: DataFrame)(op: DataFrame => DataFrame) =
+      runStateful(tag, first +: heartbeats, "60 seconds")(op)._2.lastOption
+    val rowDelta = lastStateRows("rowdrain",
+      changes((1L, mkTs(10), 1L, "U", "g", 5L), (2L, mkTs(12), 2L, "U", "g", 6L)))(
+      s => Retractions.rowDeltaStream(ev(s)).toDF())
+    assert(rowDelta.contains(1L),
+      s"drained keys must leave no state row (want 1 — the unripe heartbeat), got $rowDelta")
+    val retract = lastStateRows("retdrain",
+      changes((5L, mkTs(10), 1L, "U", "g", 5L), (5L, mkTs(12), 2L, "D", "", 0L)))(
+      s => Retractions.retractStream(ev(s)).toDF())
+    assert(retract.contains(1L),
+      s"a deleted key must leave no state row (want 1 — the unripe heartbeat), got $retract")
+    // join key x: entity 1 on side A (odd k), entity 2 on side B, both die
+    val join = lastStateRows("joindrain",
+      changes((1L, mkTs(10), 1L, "U", "x", 5L), (2L, mkTs(11), 2L, "U", "x", 6L),
+        (1L, mkTs(12), 3L, "D", "x", 0L), (2L, mkTs(13), 4L, "D", "x", 0L)))(
+      s => Retractions.joinDeltaStream(ev(s.where(col("k") % 2 === 1)),
+        ev(s.where(col("k") % 2 === 0))).toDF())
+    assert(join.contains(1L),
+      s"a join key whose both sides died must leave no state row (want 1), got $join")
+  }
+
+  test("watermark-seal operators: state stays bounded over a long out-of-order stream") {
+    import spark.implicits._
+    import graft.pipeline.{Retractions, Scd2, Transitions}
+    // One file per trigger per 10 s slot of event time, watermark delay
+    // 30 s, 24 keys. Key i lives 14 s from slot i: two upserts, then two
+    // deletes; its changes alternate between join side A (even tie) and
+    // side B, and as-of rights (even tie) and lefts. Every event is delivered in its
+    // own slot's file or the next one, shuffled — out of order, but inside
+    // the delay, so Spark's late filter drops nothing.
+    val t0 = 1700000000000L
+    val rnd = new scala.util.Random(7)
+    val evs = for (i <- 0 until 24; (dt, n) <- Seq(1, 7, 13, 15).zipWithIndex) yield {
+      val sec = 10L * i + dt
+      (i.toLong, i % 4L, s"j$i", new Timestamp(t0 + sec * 1000), 4L * i + n,
+        if (n < 2) "U" else "D", s"g${i % 3}", i.toLong)
+    }
+    def frame(rs: Seq[(Long, Long, String, Timestamp, Long, String, String, Long)]) =
+      rs.toDF("k", "u", "j", "ts", "tie", "op", "grp", "v")
+    val slotOf = evs.groupBy(e => (e._4.getTime - t0) / 10000 + rnd.nextInt(2))
+    // two far-future heartbeats on their own key seal everything before them
+    val hb = Seq(1, 2).map(n => frame(Seq((9999L, 99L, "hb", new Timestamp(t0 + n * 100000000L),
+      100000L + n, "U", "hb", 0L))))
+    val files = (0L to slotOf.keys.max).map(f => frame(rnd.shuffle(slotOf.getOrElse(f, Nil)))) ++ hb
+    val batch = frame(evs).unionByName(hb.reduce(_ unionByName _))
+
+    def chg(s: DataFrame, groupCol: String) =
+      Retractions.changeEvents(s, "k", "ts", "tie", "op", groupCol, "v")
+    // (name, operator, its output's heartbeat rows, state-row bound).
+    // Retraction, row and join state drain with their keys and the as-of
+    // join forgets idle keys after its TTL: their bound is the keys still
+    // inside the delay, not the 24 the stream saw. SCD2 and transitions
+    // keep one carry row per key by contract; their bound is the 4-key
+    // universe + the heartbeat.
+    type Op = (DataFrame, Boolean) => DataFrame
+    val ops: Seq[(String, Op, org.apache.spark.sql.Column, Long)] = Seq(
+      ("retract", (s: DataFrame, st: Boolean) =>
+        Retractions.retractStream(chg(s, "grp"), st).toDF(), col("grp") === "hb", 10L),
+      ("rows", (s: DataFrame, st: Boolean) =>
+        Retractions.rowDeltaStream(chg(s, "grp"), st).toDF(), col("grp") === "hb", 10L),
+      ("join", (s: DataFrame, st: Boolean) =>
+        Retractions.joinDeltaStream(chg(s.where(col("tie") % 2 === 0), "j"),
+          chg(s.where(col("tie") % 2 === 1), "j"), st).toDF(), col("j") === "hb", 10L),
+      ("asof", (s: DataFrame, st: Boolean) =>
+        Joins.asOfJoinStream(s.select(col("j").as("k"), col("ts"), col("tie"),
+          (col("tie") % 2 === 1).as("isLeft"), col("op").as("payload")).as[Joins.AsOfEvent],
+          st, idleTtlMs = Some(10000L)).toDF(), col("k") === "hb", 10L),
+      ("scd2", (s: DataFrame, st: Boolean) =>
+        Scd2.scd2Stream(s.select(col("u").cast("string").as("k"), col("ts"), col("tie"),
+          col("op").as("payload")).as[Scd2.Scd2Event], st).toDF(), col("k") === "99", 5L),
+      ("trans", (s: DataFrame, st: Boolean) =>
+        Transitions.mine(s.select(col("u").as("user_id"), col("tie").as("event_id"),
+          col("op").as("event_type"), col("ts")), st).toDF(), col("user_id") === 99L, 5L))
+    ops.foreach { case (name, op, isHeartbeat, bound) =>
+      val (got, rows) = runStateful(s"seal_$name", files, "30 seconds")(op(_, true))
+      assert(rows.size >= 20, s"$name: want >= 20 triggers, got ${rows.size}")
+      assert(rows.max <= bound, s"$name: state rows must stay <= $bound, got $rows")
+      assertSameRows(got.where(!isHeartbeat), op(batch, false).where(!isHeartbeat),
+        s"$name: streaming == batch")
+    }
   }
 
   // ---------------- streaming event-transition mining (q63 twin) ----------------
